@@ -75,10 +75,20 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    // phase-attribution bookkeeping is on for the measurement only (see
+    // BenchPhases.enabled)
+    val failures = BenchPhases.withPhases(measure())
+    if (failures.nonEmpty) {
+      System.err.println(s"[bench] ${failures.size} queries failed: " + failures.mkString("; "))
+      sys.exit(1)
+    }
+  }
+
+  /** Run the suite, write the metric line; returns the failures in order. */
+  private def measure(): List[String] = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    BenchPhases.enable() // turn on phase-attribution bookkeeping (see BenchPhases.enabled)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -273,9 +283,6 @@ object Bench {
     Files.writeString(
       Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")), line + "\n")
     spark.stop()
-    if (failures.nonEmpty) {
-      System.err.println(s"[bench] ${failures.size} queries failed: " + failures.reverse.mkString("; "))
-      sys.exit(1)
-    }
+    failures.reverse
   }
 }

@@ -16,17 +16,28 @@ package graft
 object BenchPhases {
   private val acc = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
-  /** True only inside the measurement harnesses (Bench/Profile call
-    * `enable()`). Operators whose phase ATTRIBUTION needs a persist +
-    * count that the query itself does not (q201/q204: the synthetic
-    * corpus is consumed exactly once downstream) gate that bookkeeping
-    * here, so a production run never pays a whole-corpus MEMORY_AND_DISK
-    * materialization for the sake of a bench sub-timing (r21 verdict
-    * item 10). Timed bench behavior is unchanged — the harness always
-    * enables it.
+  @volatile private var on: Boolean = false
+
+  /** True only inside `withPhases` (Bench and Profile run their
+    * measurement in one). Operators whose phase ATTRIBUTION needs a
+    * persist + count that the query itself does not (q201/q204: the
+    * synthetic corpus is consumed exactly once downstream) gate that
+    * bookkeeping here, so a production run never pays a whole-corpus
+    * MEMORY_AND_DISK materialization for the sake of a bench sub-timing
+    * (r21 verdict item 10). Timed bench behavior is unchanged — the
+    * harness always measures inside the scope.
     */
-  @volatile var enabled: Boolean = false
-  def enable(): Unit = { enabled = true }
+  def enabled: Boolean = on
+
+  /** Run `f` with phase attribution enabled, restoring the previous
+    * setting afterwards: harness state cannot leak into later non-bench
+    * work (verify passes, tests, an embedding application) in the JVM.
+    */
+  def withPhases[T](f: => T): T = {
+    val prev = on
+    on = true
+    try f finally on = prev
+  }
 
   def add(phase: String, sec: Double): Unit = {
     acc.merge(phase, Double.box(sec),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 /** Measurement harness for the optimization rounds (guide §1: measure
   * first). For each named query it
@@ -32,7 +32,11 @@ object Profile {
     val outDir = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r22"))
     Files.createDirectories(outDir)
-    BenchPhases.enable() // turn on phase-attribution bookkeeping (see BenchPhases.enabled)
+    BenchPhases.withPhases(measure(tag, names, reps, sfDir, cpus, outDir))
+  }
+
+  private def measure(tag: String, names: Seq[String], reps: Int, sfDir: String,
+      cpus: String, outDir: Path): Unit = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

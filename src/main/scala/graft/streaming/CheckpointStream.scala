@@ -213,8 +213,9 @@ object CheckpointStream {
     * bucket directory the session hashes to (`bucketOf` is a pure function
     * of the key) with a plain parquet reader, pushing a `user_id = key`
     * predicate down so non-matching row groups are skipped via statistics.
-    * Cost per first-seen-or-revived key: one statistics-pruned bucket read —
-    * the same I/O class as the upsert's own touched-bucket rewrite, and at
+    * Cost per first-seen-or-revived key: one statistics-pruned read of the
+    * bucket's data file (one per bucket, see `upsert`) — the same I/O
+    * class as the upsert's own touched-bucket rewrite, and at
     * cluster scale a bucket is sink_size/buckets with thousands of buckets.
     *
     * Crash-window rule: a `.bak` bucket, when present, is the PRE-batch
@@ -528,6 +529,8 @@ object CheckpointStream {
   /** Number of hash partitions the session sink is laid out in. Sized so a
     * micro-batch's touched buckets (and their rewrite I/O) stay a small
     * fraction of the sink; at cluster scale this would be thousands.
+    * Each bucket dir holds one data file once a batch has rewritten it
+    * (see `upsert`), so revival reads one file per bucket.
     */
   val SinkBuckets = 64
 
@@ -643,11 +646,16 @@ object CheckpointStream {
     * Scale shape: the sink is hash-partitioned on `user_id` into
     * `SinkBuckets` bucket dirs, and a batch rewrites ONLY the buckets its
     * sessions hash into — I/O is proportional to touched buckets, not sink
-    * size. Crash-safe promote: merged buckets are written to a fresh `.tmp`
-    * dir while the sink stays untouched, originals are renamed into `.bak`,
-    * new partitions renamed in, then `.bak` dropped; `recoverBackup` makes
-    * any interruption recoverable, and the streaming checkpoint replays the
-    * batch on restart. (A transactional table format's MERGE is the
+    * size. The merged rows are shuffled on `bucket` before the partitioned
+    * write, so each bucket's rows land in one task: a batch writes at most
+    * one file per touched bucket, and the next batch's read-back and
+    * `reloadSessionFromSink` open one file per bucket. A bucket holding
+    * several files (written by an older engine) is folded into one by the
+    * next batch that touches it. Crash-safe promote: merged buckets are
+    * written to a fresh `.tmp` dir while the sink stays untouched, originals
+    * are renamed into `.bak`, new partitions renamed in, then `.bak`
+    * dropped; `recoverBackup` makes any interruption recoverable, and the
+    * streaming checkpoint replays the batch on restart. (A transactional table format's MERGE is the
     * production-grade equivalent; this is the dependency-free stand-in.)
     */
   def upsert(batch: DataFrame, sinkDir: String, buckets: Int = SinkBuckets): Unit = {
@@ -678,8 +686,9 @@ object CheckpointStream {
           .join(batch.select("user_id").distinct(), Seq("user_id"), "left_anti")
           .unionByName(withBucket)
       }
-    // materialize to .tmp while the sink (the read side) is still in place
-    merged.write.partitionBy("bucket").parquet(tmpPath.toString)
+    // materialize to .tmp while the sink (the read side) is still in place;
+    // one task per bucket, so one file per bucket (AQE sizes the tasks)
+    merged.repartition(col("bucket")).write.partitionBy("bucket").parquet(tmpPath.toString)
     fs.mkdirs(bakPath)
     touchedExisting.foreach { b =>
       renameOrThrow(fs, new Path(sinkPath, s"bucket=$b"), new Path(bakPath, s"bucket=$b"))

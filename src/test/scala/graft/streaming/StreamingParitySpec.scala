@@ -4,6 +4,7 @@ import graft.{SparkTestSession, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 /** E1 ≡ E2 lifecycle parity (SURVEY §7.5.3): streaming the events through
@@ -13,6 +14,25 @@ import java.nio.file.Files
 class StreamingParitySpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
+
+  /** `perBucket` user ids in each of `buckets` distinct sink buckets,
+    * probed with the sink's own hash: user id -> bucket.
+    */
+  private def usersSharingBuckets(buckets: Int, perBucket: Int): Map[Long, Int] =
+    spark.range(1, 2000).select(
+      col("id"), CheckpointStream.bucketOf(col("id"), CheckpointStream.SinkBuckets).as("b"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toSeq
+      .groupBy(_._2).toSeq.sortBy(_._1).map(_._2)
+      .filter(_.size >= perBucket).take(buckets)
+      .flatMap(_.take(perBucket)).toMap
+
+  /** Data files per `bucket=*` dir of a sink (none while it is absent). */
+  private def dataFiles(sink: String): Map[Int, Int] =
+    Option(new java.io.File(sink).listFiles).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.startsWith("bucket=")).map { d =>
+        d.getName.stripPrefix("bucket=").toInt ->
+          d.listFiles.count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      }.toMap
 
   test("streaming (3 micro-batches) == batch backfill over sf0.001 events") {
     import spark.implicits._
@@ -142,6 +162,23 @@ class StreamingParitySpec extends AnyFunSuite {
     assert(spark.read.parquet(sink).count() == 2)
   }
 
+  test("upsert writes one data file per touched bucket, however the batch is partitioned") {
+    import spark.implicits._
+    val sink = Files.createTempDirectory("graft_onefile_").toString + "/sink"
+    val bucketOf = usersSharingBuckets(buckets = 3, perBucket = 4)
+    def batch(users: Iterable[Long], v: Int) = users.toSeq.flatMap { u =>
+      (0 to 1).map(i => CheckpointStream.SessionFlat(u, s"t$i", v * 100L + i, v * 1000L,
+        s"v$v-u$u-$i", v))
+    }.toDF().repartition(4) // each bucket's rows spread over the input partitions
+    CheckpointStream.upsert(batch(bucketOf.keys, 1), sink)
+    assert(dataFiles(sink) == bucketOf.values.map(_ -> 1).toMap)
+    // half the sessions change: each bucket merges kept rows with new ones
+    val changed = bucketOf.keys.toSeq.sorted.grouped(2).map(_.head).toSeq
+    CheckpointStream.upsert(batch(changed, 2), sink)
+    assert(dataFiles(sink) == bucketOf.values.map(_ -> 1).toMap)
+    assert(spark.read.parquet(sink).count() == bucketOf.size * 2)
+  }
+
   test("upsert recovers an interrupted promote from the .bak backup") {
     import spark.implicits._
     val sink = Files.createTempDirectory("graft_recover_").toString + "/sink"
@@ -167,23 +204,67 @@ class StreamingParitySpec extends AnyFunSuite {
 
   test("upsert property: random batch sequences resolve to last-write-per-session") {
     import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val sink = Files.createTempDirectory("graft_upsert_prop_").toString + "/sink"
-    // model: the sink must always equal the latest batch's rows per user
-    var model = Map.empty[Long, Seq[CheckpointStream.SessionFlat]]
-    for (batchNo <- 1 to 5) {
-      val users = rnd.shuffle((1L to 9L).toVector).take(1 + rnd.nextInt(4))
-      val batch = users.flatMap { u =>
-        (0 to rnd.nextInt(2)).map(i =>
-          CheckpointStream.SessionFlat(u, s"t$i", batchNo * 100L + i, batchNo * 1000L,
-            s"b$batchNo-u$u-$i", batchNo))
+    // sessions share buckets, so a batch rewrites buckets that also hold
+    // sessions it does not carry
+    val bucketOf = usersSharingBuckets(buckets = 3, perBucket = 3)
+    val pool = bucketOf.keys.toVector.sorted
+    val sconf = new CheckpointStream.SerializableHadoopConf(
+      spark.sparkContext.hadoopConfiguration)
+    def reload(sink: String, u: Long) =
+      CheckpointStream.reloadSessionFromSink(sink, CheckpointStream.SinkBuckets, sconf)(u)
+        .map(st => (st.sessionId, st.sequenceNumber, st.content.map { case (t, cds) =>
+          t -> cds.map(cd => (new String(cd.checkpoint, StandardCharsets.UTF_8),
+            cd.checkpointNs, cd.threadId, cd.checkpointId, cd.taskId))
+        }))
+    val initial = pool.flatMap(u => (0 to 1).map(i =>
+      CheckpointStream.SessionFlat(u, s"t$i", i.toLong, 10L, s"seed-u$u-$i", 0)))
+    // two starting sinks: empty, and one in the layout older engines wrote,
+    // with every bucket split over several files
+    for (multiFile <- Seq(false, true)) {
+      val rnd = new scala.util.Random(7)
+      val sink = Files.createTempDirectory("graft_upsert_prop_").toString + "/sink"
+      // model: the sink must always equal the latest batch's rows per user
+      var model = Map.empty[Long, Seq[CheckpointStream.SessionFlat]]
+      var carriedThroughFold = 0
+      if (multiFile) {
+        initial.toDF()
+          .withColumn("bucket", CheckpointStream.bucketOf(col("user_id"), CheckpointStream.SinkBuckets))
+          .repartition(3).write.partitionBy("bucket").parquet(sink)
+        val sinkPath = new org.apache.hadoop.fs.Path(sink)
+        CheckpointStream.stampManifest(
+          sinkPath.getFileSystem(spark.sparkContext.hadoopConfiguration), sinkPath)
+        assert(dataFiles(sink).values.forall(_ > 1), s"fixture: ${dataFiles(sink)}")
+        model = initial.groupBy(_.user_id)
       }
-      model = model ++ batch.groupBy(_.user_id).view.mapValues(_.toSeq).toMap
-      CheckpointStream.upsert(batch.toDF(), sink)
-      val got = spark.read.parquet(sink).as[CheckpointStream.SessionFlat]
-        .collect().toSet
-      assert(got == model.values.flatten.toSet,
-        s"batch $batchNo: sink diverged from last-write model\n got=$got\n exp=${model.values.flatten.toSet}")
+      for (batchNo <- 1 to 5) {
+        val users = rnd.shuffle(pool).take(1 + rnd.nextInt(4))
+        val batch = users.flatMap { u =>
+          (0 to rnd.nextInt(2)).map(i =>
+            CheckpointStream.SessionFlat(u, s"t$i", batchNo * 100L + i, batchNo * 1000L,
+              s"b$batchNo-u$u-$i", batchNo))
+        }
+        val filesBefore = dataFiles(sink)
+        val revivedBefore = pool.map(u => u -> reload(sink, u)).toMap
+        model = model ++ batch.groupBy(_.user_id).view.mapValues(_.toSeq).toMap
+        CheckpointStream.upsert(batch.toDF().repartition(2), sink)
+        val got = spark.read.parquet(sink).as[CheckpointStream.SessionFlat]
+          .collect().toSet
+        assert(got == model.values.flatten.toSet,
+          s"batch $batchNo: sink diverged from last-write model\n got=$got\n exp=${model.values.flatten.toSet}")
+        val touched = users.map(bucketOf).toSet
+        val files = dataFiles(sink)
+        assert(touched.forall(files(_) == 1), s"batch $batchNo: files per bucket $files")
+        // a session the batch does not carry revives unchanged, also from a
+        // bucket the batch folded into one file
+        for (u <- pool if !users.contains(u)) {
+          assert(reload(sink, u) == revivedBefore(u), s"batch $batchNo: session $u revived differently")
+          if (revivedBefore(u).isDefined && filesBefore.getOrElse(bucketOf(u), 0) > 1 &&
+              touched(bucketOf(u)))
+            carriedThroughFold += 1
+        }
+      }
+      if (multiFile)
+        assert(carriedThroughFold > 0, "no batch folded a multi-file bucket around a kept session")
     }
   }
 
